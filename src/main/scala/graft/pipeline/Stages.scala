@@ -18,10 +18,15 @@ import graft.operators.AsOfJoin
   * windows, stacking) are the only shuffles. Each step's `can_run`
   * precondition is encoded as null-gating or a filter inside the stage.
   *
-  * Scale posture: logbook and mask dims are broadcast (J1/J2); the
-  * propagation step is a window (A7 — no re-grouping shuffle); stacking is a
-  * single groupBy with a mergeable per-pixel aggregator (no collect_list of
-  * images); everything else is row-local.
+  * Scale posture: the logbook dim is broadcast (J1). The mask dim (J2) is
+  * not: [[AsOfJoin.backward]] unions it with the image-bearing fact rows and
+  * windows over `configuration`, so the fact side is shuffled on
+  * `configuration`, and the row-local steps that follow it (beam centre,
+  * beam mask, flux, beam analysis) run in at most one task per
+  * configuration — a single task for a one-configuration tree. The
+  * propagation step is a window (A7 — no re-grouping shuffle); stacking is
+  * a single groupBy with a mergeable per-pixel aggregator (no collect_list
+  * of images); everything else is row-local.
   */
 object Stages {
 

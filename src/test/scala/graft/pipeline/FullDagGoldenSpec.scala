@@ -2,10 +2,11 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.sources.Hdf5Source
 
 /** The last integration seam in one pass: committed `.nxs` FIXTURE BYTES ->
@@ -47,7 +48,11 @@ class FullDagGoldenSpec extends SparkSpec {
     Stages.Context(logbook, masks)
   }
 
-  private lazy val processed: DataFrame = {
+  private lazy val processed: DataFrame = pipeline()
+
+  /** A fresh plan of the whole chain over the committed tree, up to the
+    * step before the flux table. */
+  private def pipeline(): DataFrame = {
     val dir = resourceDir("/h5/pipe")
     val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.nxs")
@@ -131,5 +136,30 @@ class FullDagGoldenSpec extends SparkSpec {
         round(aggregate(col("stacked_image_stats.sem"), lit(0.0d),
           (a, x) => a + x), 3).as("sem_img_sum"))
     checkGolden("full_dag_stacked.csv", csvLines(stacked))
+  }
+
+  test("a repeat pass over the same tree compiles no generated class") {
+    // Spark's compiled-class LRU is JVM-wide and holds 100 entries by
+    // default; one pass of this chain generates ~90 classes, so in a test
+    // JVM at the default every repeat pass re-ran Janino on 20-50 of them.
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val processed = pipeline()
+      Stages.fluxThicknessTable(processed, ctx).collect()
+      Stages.stacker(processed, ctx).collect()
+      ctx.caches.release()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    // A rebuilt plan is not always the same plan: the second or third build
+    // of this chain can generate a few classes no earlier pass did (3 in
+    // the runs measured), which are new code, not evictions. So the chain
+    // repeats until a pass compiles nothing, which a thrashing cache never
+    // allows.
+    val counts = scala.collection.mutable.ArrayBuffer(compiles(), compiles())
+    while (counts.last != 0 && counts.size < 5) counts += compiles()
+    assert(counts.last == 0,
+      s"every repeat pass compiled classes; classes per pass: ${counts.mkString(", ")}")
   }
 }
